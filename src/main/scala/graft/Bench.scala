@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":"total","value":…,"queries":{…}}.
   *
@@ -10,18 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the actual core count (capped at 32) rather than a
-    // hard-coded 32 — SPARK_GRAFT_CPUS still overrides.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries
@@ -29,10 +17,14 @@ object Bench {
       .toSeq.sortBy(_._1)
     // Untimed warmup pass: JIT/codegen compilation and parquet footer
     // reads land here so the timed pass measures steady-state execution.
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    // A query that fails here fails the run like a timed-pass failure.
+    val warmFailed = selected.filterNot { case (name, fn) =>
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed in warmup: ${e.getMessage}")
+        false
+      }
+    }.map(_._1).toSet
     // Two timed passes, report the per-query MIN: transient host load
     // (the driver runs the oracle compare and other tooling on the same
     // box) inflates a single-pass measurement; the min over passes is
@@ -50,7 +42,7 @@ object Bench {
     }
     val (p1, p2) = (timedPass(), timedPass())
     val results = p1.zip(p2).map { case ((n, t1, ok1), (_, t2, ok2)) =>
-      (n, math.min(t1, t2), ok1 && ok2)
+      (n, math.min(t1, t2), ok1 && ok2 && !warmFailed(n))
     }
     // A failed query is recorded as -1 (not a fast fake time) and fails
     // the whole run — a regression must never masquerade as a speedup.

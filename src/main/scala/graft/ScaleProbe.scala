@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.sources.StreamIngest
 
 /** Builder-side synthetic scale probe (VERDICT r9 item 4): replicates
   * the sf0.1 `documents`/`events` tables K× and measures the scaling
@@ -79,16 +81,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val out = new StringBuilder("{")
 
@@ -156,25 +149,13 @@ object ScaleProbe {
     val st = Seq(1, 1, 10).map { k =>
       val in = s"$work/events_x$k"
       val all = replicateEvents(ev, k)
-      // the q87 layout contract: sequential time-range slices appended
-      // in event-time order, so file mtime order = watermark order
-      val Array(lo, hi) = all
-        .agg(unix_timestamp(min(col("ts"))), unix_timestamp(max(col("ts"))))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      val width = (hi - lo) / 8 + 1
-      val sliced = all.withColumn("slice",
-        ((unix_timestamp(col("ts")) - lo) / width).cast("int"))
-      val inPath = new org.apache.hadoop.fs.Path(in)
-      inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(inPath, true)
-      (0 until 8).foreach { i =>
-        sliced.where(col("slice") === i).drop("slice")
-          .coalesce(1).write.mode("append").parquet(in)
-      }
+      // the q87 layout contract: time slices in event-time order
+      StreamIngest.writeTimeSlices(all, in, 8, 0 until 8, clean = true)
       val sink = s"$work/stream_out_x$k"
-      val (_, t) = time(sources.StreamIngest.windowedAggParquet(
-        spark, in, all.schema, sink, sink + "_ckpt", filesPerTrigger = 2))
-      val stateRows = spark.read.format("statestore").load(sink + "_ckpt").count()
+      val (_, t) = time(StreamIngest.windowedAggParquet(
+        spark, in, all.schema, sink))
+      val stateRows = spark.read.format("statestore")
+        .load(StreamIngest.checkpoint(sink)).count()
       println(s"SCALEPROBE stream x$k: $t s, $stateRows state rows")
       s""""x$k":{"sec":$t,"state_rows":$stateRows}"""
     }
@@ -191,34 +172,14 @@ object ScaleProbe {
     val so = Seq(1, 1, 10).map { k =>
       val in = s"$work/events_oj_x$k"
       val all = replicateEvents(ev, k)
-      val Array(lo, hi) = all
-        .agg(unix_timestamp(min(col("ts"))), unix_timestamp(max(col("ts"))))
-        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-      val width = (hi - lo) / 6 + 1
-      val sliced = all.withColumn("slice",
-        ((unix_timestamp(col("ts")) - lo) / width).cast("int"))
-      val inPath = new org.apache.hadoop.fs.Path(in)
-      inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(inPath, true)
-      (0 until 6).foreach { i =>
-        sliced.where(col("slice") === i).drop("slice")
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      import spark.implicits._
-      (1 to 3).foreach { wave =>
-        Seq((-wave.toLong, -1L, "view"), (-wave.toLong - 10L, -1L, "click"))
-          .toDF("event_id", "user_id", "event_type")
-          .withColumn("ts", timestamp_seconds(lit(hi + wave * 864000L)))
-          .withColumn("value", lit(0.0))
-          .select("event_id", "user_id", "ts", "value", "event_type")
-          .coalesce(1).write.mode("append").parquet(in)
-      }
+      val (_, hi) = StreamIngest.writeTimeSlices(all, in, 6, 0 until 6, clean = true)
+      StreamIngest.appendJoinFlush(all, in, hi, "value" -> lit(0.0))
       val sink = s"$work/oj_out_x$k"
-      val (n, t) = time(sources.StreamIngest.streamOuterJoinParquet(
-        spark, in, all.schema, sink, sink + "_ckpt").count())
+      val (n, t) = time(StreamIngest.streamOuterJoinParquet(
+        spark, in, all.schema, sink).count())
       val stateRows = Seq("left", "right").map(side =>
         spark.read.format("statestore").option("joinSide", side)
-          .load(sink + "_ckpt").count()).sum
+          .load(StreamIngest.checkpoint(sink)).count()).sum
       println(s"SCALEPROBE outerjoin x$k: $t s, $n rows, $stateRows state rows")
       s""""x$k":{"sec":$t,"rows":$n,"state_rows":$stateRows}"""
     }

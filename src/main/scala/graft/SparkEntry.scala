@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.{CoOccur, Tokenize}
+import graft.sources.StreamIngest
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -224,9 +225,9 @@ object SparkEntry {
     // transform drift across the streaming boundary turns the row red.
     "q60_stream_ingest" -> ((s, dir) => {
       val out = Scratch.dir("stream_ingest")
-      val ingested = sources.StreamIngest.ingestParquet(
+      val ingested = StreamIngest.ingestParquet(
         s, dir, "documents.parquet",
-        tbl(s, dir, "documents").schema, out, out + "_ckpt",
+        tbl(s, dir, "documents").schema, out,
         df => df.where(length(col("text")) >= 100)
           .select(col("doc_id"), col("lang"),
             size(split(col("text"), " ", -1)).cast("long").as("n_tokens")))
@@ -313,9 +314,8 @@ object SparkEntry {
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      sources.StreamIngest.matviewParquet(s, src, ev.schema, out,
-          out + "_ckpt",
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.matviewParquet(s, src, ev.schema, out,
           df => df.groupBy("event_type").agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(38,12)")).as("dec_sum")))
         .select(col("event_type"), col("n"),
@@ -327,10 +327,8 @@ object SparkEntry {
       val out = Scratch.dir("stream_window")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      val agged = sources.StreamIngest.windowedAggParquet(
-        s, src, ev.schema, out, out + "_ckpt")
-      agged
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.windowedAggParquet(s, src, ev.schema, out)
         .select(col("win_start"), col("n"),
           col("dec_sum").cast("double").as("sum_value"))
         .orderBy("win_start")
@@ -351,13 +349,10 @@ object SparkEntry {
       val out = Scratch.dir("stream_resume")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 3, clean = true)
-      sources.StreamIngest.windowedAggParquet(
-        s, src, ev.schema, out, out + "_ckpt")
-      writeTimeSlices(ev, src, 6, 3 until 6, clean = false)
-      val agged = sources.StreamIngest.windowedAggParquetResume(
-        s, src, ev.schema, out, out + "_ckpt")
-      agged
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 3, clean = true)
+      StreamIngest.windowedAggParquet(s, src, ev.schema, out)
+      StreamIngest.writeTimeSlices(ev, src, 6, 3 until 6, clean = false)
+      StreamIngest.windowedAggParquet(s, src, ev.schema, out, resume = true)
         .select(col("win_start"), col("n"),
           col("dec_sum").cast("double").as("sum_value"))
         .orderBy("win_start")
@@ -408,13 +403,8 @@ object SparkEntry {
       val copies = docs.where(col("doc_id") < 25)
         .select((col("doc_id") + 10000L).as("doc_id"), col("text"), col("lang"))
         .withColumn("ts", timestamp_seconds(lit(base + 10)))
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      srcPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(srcPath, true)
-      originals.coalesce(1).write.mode("append").parquet(src)
-      copies.coalesce(1).write.mode("append").parquet(src)
-      sources.StreamIngest.dedupParquet(
-          s, src, originals.schema, out, out + "_ckpt")
+      StreamIngest.appendFiles(src, Seq(originals, copies), clean = true)
+      StreamIngest.dedupParquet(s, src, originals.schema, out)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_uniq"),
           sum(pmod(col("doc_id"), lit(10000L))).as("sum_id_mod"))
@@ -433,9 +423,8 @@ object SparkEntry {
       val out = Scratch.dir("stream_join")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      sources.StreamIngest.streamJoinParquet(
-          s, src, ev.schema, out, out + "_ckpt")
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.streamJoinParquet(s, src, ev.schema, out)
         .orderBy("user_id", "view_id", "click_id")
     }),
     // Stream-stream LEFT OUTER join at the gate — the state-EXPIRY
@@ -449,24 +438,9 @@ object SparkEntry {
       val out = Scratch.dir("stream_outer")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      import s.implicits._
-      // THREE sentinel waves in separate files: join-state eviction
-      // only happens in a batch that RUNS with the advanced watermark,
-      // and watermarks advance at batch END — so the last batch must
-      // carry data while an earlier batch already saw a sentinel. With
-      // maxFilesPerTrigger=2, three files guarantee ≥2 sentinel
-      // batches, the last of which runs at watermark ≥ wave-1 − delay,
-      // closing every real view's window.
-      (1 to 3).foreach { wave =>
-        Seq((-wave.toLong, -1L, "view"), (-wave.toLong - 10L, -1L, "click"))
-          .toDF("event_id", "user_id", "event_type")
-          .withColumn("ts", timestamp_seconds(lit(hi + wave * 864000L)))
-          .select("event_id", "user_id", "ts", "event_type")
-          .coalesce(1).write.mode("append").parquet(src)
-      }
-      sources.StreamIngest.streamOuterJoinParquet(
-          s, src, ev.schema, out, out + "_ckpt")
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.appendJoinFlush(ev, src, hi)
+      StreamIngest.streamOuterJoinParquet(s, src, ev.schema, out)
         .orderBy("user_id", "view_id", "click_id")
     }),
     // Streaming CDC UPSERT at the gate — the foreachBatch idiom: each
@@ -482,9 +456,8 @@ object SparkEntry {
       val stateRoot = Scratch.dir("stream_cdc_state")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      sources.StreamIngest.cdcUpsertParquet(
-          s, src, ev.schema, stateRoot, stateRoot + "_ckpt")
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.cdcUpsertParquet(s, src, ev.schema, stateRoot)
         .orderBy("user_id")
     }),
     // STREAM-STATIC JOIN at the gate: the enrichment idiom — each
@@ -503,12 +476,12 @@ object SparkEntry {
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
       val dim = tbl(s, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
-      val enriched = sources.StreamIngest.ingestParquet(
-        s, src, "part-*", ev.schema, out, out + "_ckpt",
+      val enriched = StreamIngest.ingestParquet(
+        s, src, "part-*", ev.schema, out,
         df => df.join(broadcast(dim), Seq("user_id")))
       enriched.groupBy("segment", "event_type")
         .agg(count(lit(1)).as("n"),
@@ -519,13 +492,9 @@ object SparkEntry {
       val src = Scratch.dir("custom_state_src")
       val out = Scratch.dir("custom_state")
       val ev = rel.Queries.events(s, dir).select(col("user_id"), col("ts"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      // sentinel: 2*(late+gap) past the end, one per user, LAST append
-      ev.select(col("user_id")).distinct()
-        .withColumn("ts", timestamp_seconds(lit(hi + 10860L)))
-        .write.mode("append").parquet(src)
-      sources.StreamIngest.sessionizeParquet(
-          s, src, ev.schema, out, out + "_ckpt")
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.appendKeySentinels(ev, src, "user_id", hi)
+      StreamIngest.sessionizeParquet(s, src, ev.schema, out)
         .orderBy("user_id", "sess_start_us")
     }),
     // The NATIVE session_window operator as a REAL streaming drain —
@@ -542,13 +511,10 @@ object SparkEntry {
       val src = Scratch.dir("stream_session_src")
       val out = Scratch.dir("stream_session")
       val ev = rel.Queries.events(s, dir).select(col("user_id"), col("ts"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      ev.select(col("user_id")).distinct()
-        .withColumn("ts", timestamp_seconds(lit(hi + 10860L)))
-        .write.mode("append").parquet(src)
-      sources.StreamIngest.sessionWindowParquet(
-          s, src, ev.schema, out, out + "_ckpt")
-        .where(col("sess_start_us") < lit(hi + 10860L) * 1000000L)
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      val at = StreamIngest.appendKeySentinels(ev, src, "user_id", hi)
+      StreamIngest.sessionWindowParquet(s, src, ev.schema, out)
+        .where(col("sess_start_us") < lit(at) * 1000000L)
         .orderBy("user_id", "sess_start_us")
     }),
     // The q87 stateful drain on the ROCKSDB state store — the
@@ -561,9 +527,9 @@ object SparkEntry {
       val out = Scratch.dir("rocksdb_state")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      sources.StreamIngest.windowedAggParquetRocksDb(
-          s, src, ev.schema, out, out + "_ckpt")
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.windowedAggParquet(s, src, ev.schema, out,
+          provider = Some(StreamIngest.RocksDbProvider))
         .select(col("win_start"), col("n"),
           col("dec_sum").cast("double").as("sum_value"))
         .orderBy("win_start")
@@ -607,10 +573,9 @@ object SparkEntry {
       val out = Scratch.dir("state_reader")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      sources.StreamIngest.windowedAggParquet(
-        s, src, ev.schema, out, out + "_ckpt")
-      s.read.format("statestore").load(out + "_ckpt")
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.windowedAggParquet(s, src, ev.schema, out)
+      s.read.format("statestore").load(StreamIngest.checkpoint(out))
         .select(unix_timestamp(col("key.window.start")).as("win_start"),
           col("value.count").as("n"),
           col("value.sum").cast("double").as("sum_value"))
@@ -634,21 +599,21 @@ object SparkEntry {
       val out = Scratch.dir("late_metrics")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
       val lateTail = ev
         .crossJoin(broadcast(ev.agg(min(unix_micros(col("ts"))).as("mn"))))
         .where(expr("unix_micros(ts) DIV 3600000000 = mn DIV 3600000000"))
         .select((col("event_id") + 10000000L).as("event_id"),
           col("user_id"), col("ts"), col("value"))
-      lateTail.coalesce(1).write.mode("append").parquet(src)
-      val (sink, nInput) = sources.StreamIngest
-        .windowedAggParquetWithLateMetrics(s, src, ev.schema, out, out + "_ckpt")
+      StreamIngest.appendFiles(src, Seq(lateTail))
+      val (sink, nInput) = StreamIngest
+        .windowedAggParquetWithLateMetrics(s, src, ev.schema, out)
       // Row-balance identity across THREE observability surfaces: the
       // progress metrics (rows read), the sink (rows emitted in closed
       // windows), and the state-store reader (rows retained in open
       // windows). input − emitted − retained = rows the watermark
       // dropped — exact wherever the engine places the late filter.
-      val state = s.read.format("statestore").load(out + "_ckpt")
+      val state = s.read.format("statestore").load(StreamIngest.checkpoint(out))
         .agg(coalesce(sum(col("value.count")), lit(0L)).as("n_state_rows"))
       sink.agg(count(lit(1)).as("n_windows"), sum(col("n")).as("total_rows"))
         .crossJoin(broadcast(state))
@@ -669,13 +634,10 @@ object SparkEntry {
       val src = Scratch.dir("tws_session_src")
       val out = Scratch.dir("tws_session")
       val ev = rel.Queries.events(s, dir).select(col("user_id"), col("ts"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      ev.select(col("user_id")).distinct()
-        .withColumn("ts", timestamp_seconds(lit(hi + 10860L)))
-        .write.mode("append").parquet(src)
-      sources.StreamIngest.twsSessionizeParquet(
-          s, src, ev.schema, out, out + "_ckpt")
-        .where(col("sess_start_us") < lit(hi + 10860L) * 1000000L)
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      val at = StreamIngest.appendKeySentinels(ev, src, "user_id", hi)
+      StreamIngest.twsSessionizeParquet(s, src, ev.schema, out)
+        .where(col("sess_start_us") < lit(at) * 1000000L)
         .orderBy("user_id", "sess_start_us")
     }),
     // transformWithState MAP state at the gate: per-type user profiles
@@ -692,13 +654,11 @@ object SparkEntry {
       val out = Scratch.dir("tws_profiles")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_type"), col("user_id"), col("ts"), col("value"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
-      ev.select(col("event_type")).distinct()
-        .select(col("event_type"), lit(-1L).as("user_id"),
-          timestamp_seconds(lit(hi + 10860L)).as("ts"), lit(0.0).as("value"))
-        .write.mode("append").parquet(src)
-      sources.StreamIngest.userProfilesParquet(
-          s, src, ev.schema, out, out + "_ckpt", (hi + 7200L) * 1000L)
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 6, clean = true)
+      StreamIngest.appendKeySentinels(ev, src, "event_type", hi,
+        "user_id" -> lit(-1L), "value" -> lit(0.0))
+      StreamIngest.userProfilesParquet(
+          s, src, ev.schema, out, (hi + 7200L) * 1000L)
         .orderBy("event_type", "user_id")
     }),
     // q278 across a STOP/RESTART boundary — the v2-state recovery
@@ -715,55 +675,17 @@ object SparkEntry {
       val out = Scratch.dir("tws_profiles_resume")
       val ev = rel.Queries.events(s, dir)
         .select(col("event_type"), col("user_id"), col("ts"), col("value"))
-      val (_, hi) = writeTimeSlices(ev, src, 6, 0 until 3, clean = true)
-      sources.StreamIngest.userProfilesParquet(
-        s, src, ev.schema, out, out + "_ckpt", (hi + 7200L) * 1000L)
-      writeTimeSlices(ev, src, 6, 3 until 6, clean = false)
-      ev.select(col("event_type")).distinct()
-        .select(col("event_type"), lit(-1L).as("user_id"),
-          timestamp_seconds(lit(hi + 10860L)).as("ts"), lit(0.0).as("value"))
-        .write.mode("append").parquet(src)
-      sources.StreamIngest.userProfilesParquetResume(
-          s, src, ev.schema, out, out + "_ckpt", (hi + 7200L) * 1000L)
+      val (_, hi) = StreamIngest.writeTimeSlices(ev, src, 6, 0 until 3, clean = true)
+      StreamIngest.userProfilesParquet(
+        s, src, ev.schema, out, (hi + 7200L) * 1000L)
+      StreamIngest.writeTimeSlices(ev, src, 6, 3 until 6, clean = false)
+      StreamIngest.appendKeySentinels(ev, src, "event_type", hi,
+        "user_id" -> lit(-1L), "value" -> lit(0.0))
+      StreamIngest.userProfilesParquet(
+          s, src, ev.schema, out, (hi + 7200L) * 1000L, resume = true)
         .orderBy("event_type", "user_id")
     }),
   )
-
-  /** Lay `ev` (must carry an event-time `ts`) out under `src` as the
-    * sequential time-sliced appends the streaming gates consume: the
-    * event-time range split into `slices` equal cells, slice `range`
-    * written in ascending order, ONE file per slice — a slice split
-    * across part files would straddle micro-batches
-    * (maxFilesPerTrigger) and its unordered later files would arrive
-    * behind the watermark and be late-dropped (StreamingSpec pins that
-    * failure mode). Sequential appends give ascending mtimes, and the
-    * file source processes files in mtime order — the layout
-    * discipline a production event feed gets from date-partitioned
-    * arrival. Returns the (lo, hi) epoch-second event-time bounds; the
-    * 1-row bounds collect is fixture control flow, not part of any
-    * declared query plan. Shared by q87/q90/q101 (q101 calls twice:
-    * slices 0–2 before the first drain, 3–5 before the resumed one). */
-  private def writeTimeSlices(ev: DataFrame, src: String, slices: Int,
-                              range: Range, clean: Boolean): (Long, Long) = {
-    val s = ev.sparkSession
-    val Array(lo, hi) = ev
-      .agg(unix_timestamp(min(col("ts"))), unix_timestamp(max(col("ts"))))
-      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val width = (hi - lo) / slices + 1
-    val sliced = ev.withColumn("slice",
-      ((unix_timestamp(col("ts")) - lo) / width).cast("int"))
-    if (clean) {
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      srcPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(srcPath, true)
-    }
-    range.foreach { i =>
-      sliced.where(col("slice") === i).drop("slice")
-        .coalesce(1)
-        .write.mode("append").parquet(src)
-    }
-    (lo, hi)
-  }
 
   private def wcOracle(re: String): String =
     s"""WITH tok AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents)

@@ -1154,8 +1154,7 @@ object Queries {
     "q216_stream_index" -> ((s, dir) => {
       val out = graft.Scratch.dir("stream_postings")
       val postings = graft.sources.StreamIngest.ingestParquet(
-        s, dir, "documents.parquet", tbl(s, dir, "documents").schema,
-        out, out + "_ckpt",
+        s, dir, "documents.parquet", tbl(s, dir, "documents").schema, out,
         df => df
           .select(col("doc_id"),
             expr("filter(split(text, ' ', -1), t -> t != '')").as("ts"))

@@ -1,18 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Incremental file ingestion — the Structured Streaming file source →
   * file sink pipeline a crawl/landing-zone feed runs in production:
   * new files appear under a glob, the source picks them up in bounded
-  * batches (`maxFilesPerTrigger`), a stateless transform runs per
-  * micro-batch, and the checkpointed parquet sink commits exactly-once
-  * (the `_spark_metadata` log makes partial task output invisible to
-  * readers). `Trigger.AvailableNow` drains everything currently present
-  * and stops — the backfill/catch-up mode; a live deployment swaps the
-  * trigger for a processing-time one and nothing else changes.
+  * batches (`maxFilesPerTrigger`), a transform runs per micro-batch,
+  * and the checkpointed parquet sink commits exactly-once.
+  * `Trigger.AvailableNow` drains everything currently present and
+  * stops — the backfill mode; a live deployment swaps the trigger for a
+  * processing-time one and nothing else changes.
+  *
+  * The single owner of how a streaming gate runs: source layout, sink,
+  * trigger, and checkpoint (derived from the sink path). Every drain
+  * goes through [[drain]].
   *
   * Scale: the source lists and checkpoints file names, never content —
   * state is O(files); each micro-batch is an ordinary distributed batch
@@ -21,17 +25,17 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamIngest {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the session value after. Stateful streaming queries
-    * create one state-store instance per shuffle partition PER STORE
-    * PER MICRO-BATCH (each with its own delta/snapshot files and
-    * fsyncs); at the gate's micro-batch sizes the session default of 32
-    * is pure commit overhead — 8 stores cut the q109 drain 1.9× with
-    * byte-identical results (state partitioning never affects
-    * semantics, only placement). The partition count is baked into the
-    * checkpoint at first start, so it must wrap the WHOLE drain —
-    * which also keeps q101's two-start resume consistent. A production
-    * deployment sizes this to its real per-batch state volume instead. */
+  /** The checkpoint of the drain whose sink is `out`. State-store
+    * readers (`spark.read.format("statestore")`) load this path. */
+  def checkpoint(out: String): String = out + "_ckpt"
+
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`.
+    * Stateful queries create one state-store instance per shuffle
+    * partition per store per micro-batch; at the gate's batch sizes the
+    * session default of 32 is pure commit overhead — 8 stores cut the
+    * q109 drain 1.9× with byte-identical results. The count is baked
+    * into the checkpoint at first start, so it wraps the WHOLE drain
+    * (which keeps q101's resume consistent). */
   private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
@@ -39,70 +43,8 @@ object StreamIngest {
     try body finally spark.conf.set(key, old)
   }
 
-  private def rm(spark: SparkSession, p: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    // the session's hadoopConfiguration, not a fresh Configuration():
-    // on a real cluster the sink may live on object storage whose
-    // credentials/filesystem impl are session-configured
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(path, true)
-  }
-
-  /** STATEFUL streaming at the gate: watermarked tumbling-window
-    * aggregation (count + exact-decimal sum) over a file-source stream,
-    * append-mode through the checkpointed exactly-once parquet sink.
-    * Append mode only emits a window once the watermark (max event time
-    * − delay) passes its end, so the stream's output is exactly the
-    * CLOSED windows — the final open tail is retained state that is
-    * discarded at drain end, and the q87 oracle applies the same cutoff.
-    *
-    * Determinism contract: the CALLER must lay the source files out in
-    * event-time order (sequential time-sliced appends — see the q87
-    * declaration); the file source processes files in modification-time
-    * order, so an out-of-order layout would make rows late behind the
-    * watermark and silently drop them (the exact failure mode watermarks
-    * exist to bound). State is O(open windows), not O(events). */
-  def windowedAggParquet(spark: SparkSession, in: String,
-                         schema: StructType, out: String, ckpt: String,
-                         filesPerTrigger: Int = 2): DataFrame = {
-    rm(spark, out); rm(spark, ckpt)
-    windowedAggParquetResume(spark, in, schema, out, ckpt, filesPerTrigger)
-  }
-
-  /** [[windowedAggParquet]] WITHOUT the wipe: start (or RESTART) the
-    * same query against an existing checkpoint + sink. A restarted
-    * AvailableNow drain recovers the file-source log, the watermark,
-    * and the open-window state from the checkpoint, processes only the
-    * files that arrived since the previous run, and appends only the
-    * newly-closed windows — the exactly-once recovery contract. q101
-    * exercises it across a real stop/restart boundary: a window whose
-    * events straddle the two runs must be emitted once, complete. */
-  def windowedAggParquetResume(spark: SparkSession, in: String,
-                               schema: StructType, out: String, ckpt: String,
-                               filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
-    import org.apache.spark.sql.functions._
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(38,12)")).as("dec_sum"))
-      .select(unix_timestamp(col("window.start")).as("win_start"),
-        col("n"), col("dec_sum"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    spark.read.parquet(out)
-  }
-
-  /** Run `body` with the streaming state-store provider temporarily
-    * set to `provider`, restoring the session value after. The provider
-    * is read at query start and baked into the checkpoint, so the
-    * override must wrap the whole drain. */
+  /** Run `body` with the state-store provider set to `provider`; it is
+    * baked into the checkpoint at query start, so it wraps the drain. */
   private def withStateProvider[T](spark: SparkSession, provider: String)(
       body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -114,50 +56,170 @@ object StreamIngest {
     }
   }
 
-  /** RocksDB state-store provider class name (shipped in the Spark 4
-    * distribution): the disk-backed state backend production stateful
-    * streaming runs — state volume is bounded by local disk + an
-    * in-memory working set instead of the executor heap, the property
-    * that matters once keyed state outgrows memory at 100 TB. */
+  /** RocksDB state-store provider (shipped with Spark 4): state bounded
+    * by local disk + a working set instead of the executor heap. */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** The q87 stateful drain with the state store swapped to RocksDB —
-    * same plan, same checkpoint discipline, same oracle; only the
-    * state BACKEND differs, and the gate row pins that the swap is
-    * semantically invisible (the contract that lets a deployment
-    * change backends by config, not code). */
-  def windowedAggParquetRocksDb(spark: SparkSession, in: String,
-                                schema: StructType, out: String,
-                                ckpt: String): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
-      windowedAggParquet(spark, in, schema, out, ckpt)
+  private def rm(spark: SparkSession, p: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    // the session's hadoopConfiguration: object-store sinks need it
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(path, true)
+  }
+
+  /** The exactly-once parquet file sink in append mode. */
+  private def appendParquet(w: DataStreamWriter[Row], out: String): StreamingQuery =
+    w.format("parquet").outputMode("append").start(out)
+
+  /** The one drain: wipe the sink and its checkpoint (unless `resume`),
+    * stream the parquet files under `in` (`filesPerTrigger` per
+    * micro-batch, optional `glob` name filter) through `plan` into
+    * `sink` with the derived checkpoint and `Trigger.AvailableNow`, and
+    * return the finished query. A resumed drain recovers the file-source
+    * log, watermark and operator state from the checkpoint and
+    * processes only the files that arrived since — the exactly-once
+    * recovery contract q101/q282 exercise. */
+  private def drain(spark: SparkSession, in: String, schema: StructType,
+                    out: String, filesPerTrigger: Int, resume: Boolean = false,
+                    glob: Option[String] = None, provider: Option[String] = None,
+                    sink: (DataStreamWriter[Row], String) => StreamingQuery = appendParquet)(
+      plan: DataFrame => DataFrame): StreamingQuery = {
+    def run(): StreamingQuery = withStatePartitions(spark, 8) {
+      if (!resume) { rm(spark, out); rm(spark, checkpoint(out)) }
+      val src = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      val q = sink(plan(glob.fold(src)(src.option("pathGlobFilter", _)).parquet(in))
+        .writeStream
+        .option("checkpointLocation", checkpoint(out))
+        .trigger(Trigger.AvailableNow()), out)
+      q.awaitTermination()
+      q
     }
+    provider.fold(run())(withStateProvider(spark, _)(run()))
+  }
+
+  // ------------------------------------------------------ source layout
+
+  /** Append each frame to the source directory `src` as ONE file, in
+    * order (wiping `src` first if `clean`). Sequential appends get
+    * ascending mtimes and the file source processes files in mtime
+    * order, so each frame is one arrival. */
+  def appendFiles(src: String, files: Seq[DataFrame], clean: Boolean = false): Unit = {
+    if (clean) rm(files.head.sparkSession, src)
+    files.foreach(_.coalesce(1).write.mode("append").parquet(src))
+  }
+
+  /** Lay `ev` (with an event-time `ts`) out under `src` as time-sliced
+    * appends: the event-time range split into `slices` equal cells,
+    * slices `range` written in ascending order, ONE file per slice — a
+    * slice split across files would straddle micro-batches and its
+    * later files would be late-dropped (StreamingSpec pins that). The
+    * layout a production feed gets from date-partitioned arrival.
+    * Returns the (lo, hi) epoch-second bounds of all of `ev` (the 1-row
+    * collect is fixture control flow). A resumed drain writes its
+    * slices in two calls, the second with `clean = false`. */
+  def writeTimeSlices(ev: DataFrame, src: String, slices: Int,
+                      range: Range, clean: Boolean): (Long, Long) = {
+    val Array(lo, hi) = ev
+      .agg(unix_timestamp(min(col("ts"))), unix_timestamp(max(col("ts"))))
+      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
+    val width = (hi - lo) / slices + 1
+    val sliced = ev.withColumn("slice",
+      ((unix_timestamp(col("ts")) - lo) / width).cast("int"))
+    appendFiles(src, range.map(i => sliced.where(col("slice") === i).drop("slice")), clean)
+    (lo, hi)
+  }
+
+  /** `keys` in `ev`'s column layout: `ts` = epoch second `at`, every
+    * non-key column from `fill`. */
+  private def sentinelRows(ev: DataFrame, keys: DataFrame, at: Long,
+                           fill: Seq[(String, Column)]): DataFrame = {
+    val vals = (fill :+ ("ts" -> timestamp_seconds(lit(at)))).toMap
+    keys.select(ev.columns.toIndexedSeq.map(c =>
+      if (keys.columns.contains(c)) col(c) else vals(c).as(c)): _*)
+  }
+
+  /** The timeout-flush sentinel: one event per distinct `key` of `ev`
+    * at `hi` + 2·(late + gap), appended as the LAST arrival, so the
+    * trailing no-data batch fires every real session close or flush
+    * timer; the sentinel groups never close. Other columns come from
+    * `fill`. Returns the sentinel epoch second: callers filter on it
+    * in the batch read-back, never inside the streaming plan. */
+  def appendKeySentinels(ev: DataFrame, src: String, key: String, hi: Long,
+                         fill: (String, Column)*): Long = {
+    val at = hi + 10860L
+    sentinelRows(ev, ev.select(col(key)).distinct(), at, fill)
+      .write.mode("append").parquet(src)
+    at
+  }
+
+  /** The stream-stream join flush: THREE files, each a far-future view
+    * and click of user −1. Join state is only evicted in a batch that
+    * RUNS with the advanced watermark, and watermarks advance at batch
+    * END; with 2 files per trigger, three files guarantee a last
+    * sentinel batch that closes every real view's window. Columns
+    * other than the ids, event_type and ts come from `fill`. */
+  def appendJoinFlush(ev: DataFrame, src: String, hi: Long,
+                      fill: (String, Column)*): Unit = {
+    import ev.sparkSession.implicits._
+    appendFiles(src, (1 to 3).map { wave =>
+      sentinelRows(ev,
+        Seq((-wave.toLong, -1L, "view"), (-wave.toLong - 10L, -1L, "click"))
+          .toDF("event_id", "user_id", "event_type"),
+        hi + wave * 864000L, fill)
+    })
+  }
+
+  // ------------------------------------------------------------- drains
+
+  /** q87's plan: watermarked 1 h tumbling count + exact-decimal sum. */
+  private def windowedAgg(src: DataFrame): DataFrame =
+    src.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(38,12)")).as("dec_sum"))
+      .select(unix_timestamp(col("window.start")).as("win_start"),
+        col("n"), col("dec_sum"))
+
+  /** STATEFUL streaming at the gate: [[windowedAgg]] in append mode,
+    * which emits a window once the watermark (max event time − delay)
+    * passes its end — the sink is exactly the CLOSED windows; the open
+    * tail stays in state, and the q87 oracle applies the same cutoff.
+    *
+    * The CALLER lays the source out in event-time order
+    * ([[writeTimeSlices]]); an out-of-order layout makes rows late and
+    * silently drops them. State is O(open windows), not O(events).
+    * With `resume` a window straddling the two runs is emitted once,
+    * complete (q101); `provider` swaps the state backend, which q240
+    * pins as semantically invisible. */
+  def windowedAggParquet(spark: SparkSession, in: String, schema: StructType,
+                         out: String, resume: Boolean = false,
+                         provider: Option[String] = None): DataFrame = {
+    drain(spark, in, schema, out, 2, resume, provider = provider)(windowedAgg)
+    spark.read.parquet(out)
+  }
+
+  /** The q87 drain instrumented for OBSERVABILITY: the sink plus the
+    * source rows the engine READ per its progress reports.
+    * (numRowsDroppedByWatermark undercounts — the watermark predicate
+    * is pushed into the scan, measured 1 of 21 at the gate; the balance
+    * input − emitted − retained is exact wherever the filter runs.) */
+  def windowedAggParquetWithLateMetrics(spark: SparkSession, in: String,
+      schema: StructType, out: String): (DataFrame, Long) = {
+    val q = drain(spark, in, schema, out, 2)(windowedAgg)
+    (spark.read.parquet(out), q.recentProgress.map(_.numInputRows).sum)
+  }
 
   /** The NATIVE session-window operator executed as a real streaming
     * drain (q55 gate-checks the same plan in batch mode; q90 the
     * custom-state reimplementation): session_window grouping with a
     * watermark, append mode — a session is emitted once the watermark
-    * passes its close — through the checkpointed exactly-once sink.
-    * Source-layout + sentinel contract identical to
-    * [[sessionizeParquet]]: the caller appends a far-future sentinel
-    * event per user as the LAST file so the final watermark closes
-    * every real session; the sentinel sessions themselves never close
-    * and are discarded with the state (filter them on the batch
-    * read-back — q144's rule). */
+    * passes its close. Source layout + sentinel contract identical to
+    * [[sessionizeParquet]]. */
   def sessionWindowParquet(spark: SparkSession, in: String,
-                           schema: StructType, out: String,
-                           ckpt: String): DataFrame = withStatePartitions(spark, 8) {
-    rm(spark, out); rm(spark, ckpt)
-    val sess = graft.streaming.Sessions.sessionAgg(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(in))
-    val q = sess.writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+                           schema: StructType, out: String): DataFrame = {
+    drain(spark, in, schema, out, 2)(graft.streaming.Sessions.sessionAgg(_))
     spark.read.parquet(out)
   }
 
@@ -167,135 +229,48 @@ object StreamIngest {
     * RocksDB state store (a transformWithState requirement — the v2
     * state API is implemented against RocksDB's column families). */
   def twsSessionizeParquet(spark: SparkSession, in: String,
-                           schema: StructType, out: String,
-                           ckpt: String): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
-      withStatePartitions(spark, 8) {
-        rm(spark, out); rm(spark, ckpt)
-        val sessions = graft.streaming.Sessions.sessionizeTws(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "2").parquet(in))
-          .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
-        val q = sessions.writeStream.format("parquet")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(out)
-        q.awaitTermination()
-        spark.read.parquet(out)
-      }
-    }
+                           schema: StructType, out: String): DataFrame = {
+    drain(spark, in, schema, out, 2, provider = Some(RocksDbProvider))(
+      graft.streaming.Sessions.sessionizeTws(_)
+        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events"))
+    spark.read.parquet(out)
+  }
 
   /** The MapState profile accumulator at the gate
     * ([[graft.streaming.Sessions.TwsUserProfiles]]): same drain shape
     * and RocksDB requirement as [[twsSessionizeParquet]]; the caller's
     * sentinel file pushes the watermark past `flushMs`, the per-key
     * flush timers fire in the trailing no-data batch, and the whole
-    * map state dumps exactly once into the checkpointed sink. */
-  def userProfilesParquet(spark: SparkSession, in: String,
-                          schema: StructType, out: String,
-                          ckpt: String, flushMs: Long): DataFrame = {
-    rm(spark, out); rm(spark, ckpt)
-    userProfilesParquetResume(spark, in, schema, out, ckpt, flushMs)
-  }
-
-  /** [[userProfilesParquet]] WITHOUT the wipe — start (or RESTART) the
-    * MapState drain against an existing checkpoint. The v2 analogue of
-    * [[windowedAggParquetResume]]: a restarted run recovers the
-    * RocksDB-backed MapState (every per-user accumulator written by the
-    * previous run), its registered timers, and the file-source log from
-    * the checkpoint, then folds only the new files in. q282 exercises
-    * the boundary: users whose events straddle the two runs must flush
-    * a SINGLE accumulator equal to the batch truth — a lost map entry,
-    * a replayed file, or a timer dropped in recovery all turn the gate
-    * row red. */
-  def userProfilesParquetResume(spark: SparkSession, in: String,
-                                schema: StructType, out: String,
-                                ckpt: String, flushMs: Long): DataFrame =
-    withStateProvider(spark, RocksDbProvider) {
-      withStatePartitions(spark, 8) {
-        val profiles = graft.streaming.Sessions.userProfilesTws(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "2").parquet(in), flushMs)
-          .toDF("event_type", "user_id", "n_events", "sum_vu")
-        val q = profiles.writeStream.format("parquet")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start(out)
-        q.awaitTermination()
-        spark.read.parquet(out)
-      }
-    }
-
-  /** The q87 stateful drain instrumented for OBSERVABILITY: returns
-    * the streaming engine's own late-data accounting alongside the
-    * sink. `numRowsDroppedByWatermark` (summed over the drain's
-    * micro-batch progress reports) counts rows the watermark excluded
-    * from the stateful operator — the metric a production pipeline
-    * alerts on, here made a gate-checkable VALUE: with a
-    * deterministic source layout (time-ordered slices + one
-    * deliberately-late file appended last) the watermark sequence is
-    * deterministic, so the dropped count is exactly the late file's
-    * row count and the sink is untouched by it (the late rows target
-    * windows that already closed). Returns (sink rows, dropped). */
-  def windowedAggParquetWithLateMetrics(
-      spark: SparkSession, in: String, schema: StructType, out: String,
-      ckpt: String): (DataFrame, Long) = withStatePartitions(spark, 8) {
-    import org.apache.spark.sql.functions._
-    rm(spark, out); rm(spark, ckpt)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(in)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(38,12)")).as("dec_sum"))
-      .select(unix_timestamp(col("window.start")).as("win_start"),
-        col("n"), col("dec_sum"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
-    // Total source rows the engine READ, per its own progress
-    // accounting. (numRowsDroppedByWatermark is NOT usable as the late
-    // count here: the watermark predicate is pushed into the scan, so
-    // most late rows are filtered before the stateful operator ever
-    // sees them and the per-operator counter undercounts — measured 1
-    // of 21 at the gate. The balance identity input − emitted −
-    // retained is exact regardless of where the filter runs.)
-    val inputRows = q.recentProgress.map(_.numInputRows).sum
-    (spark.read.parquet(out), inputRows)
+    * map state dumps exactly once into the checkpointed sink.
+    *
+    * With `resume` — the v2 analogue of q101 — a restarted run
+    * recovers the RocksDB-backed MapState, its registered timers, and
+    * the file-source log from the checkpoint, then folds only the new
+    * files in. q282 exercises the boundary: users whose events straddle
+    * the two runs must flush a SINGLE accumulator equal to the batch
+    * truth. */
+  def userProfilesParquet(spark: SparkSession, in: String, schema: StructType,
+                          out: String, flushMs: Long,
+                          resume: Boolean = false): DataFrame = {
+    drain(spark, in, schema, out, 2, resume, provider = Some(RocksDbProvider))(
+      graft.streaming.Sessions.userProfilesTws(_, flushMs)
+        .toDF("event_type", "user_id", "n_events", "sum_vu"))
+    spark.read.parquet(out)
   }
 
   /** The FULLY-custom-state path at the gate: drain a (user_id, ts)
     * file-source stream through
     * [[graft.streaming.Sessions.sessionizeWithState]] (gap sessionizer
-    * on flatMapGroupsWithState + event-time timeouts) into the
-    * checkpointed exactly-once sink. Emission is timeout-driven: a
-    * session leaves state only once the watermark passes its end + gap,
-    * so the CALLER must both lay the source files out in event-time
-    * order (q87's contract) and append a far-future sentinel event per
-    * user as the LAST file — the sentinel advances the final watermark
-    * past every real session's close, and the trailing no-data batch
-    * fires the timeouts that flush them. Sentinel sessions themselves
-    * stay open and are discarded at drain end. */
+    * on flatMapGroupsWithState + event-time timeouts). Emission is
+    * timeout-driven: a session leaves state only once the watermark
+    * passes its end + gap, so the CALLER must both lay the source files
+    * out in event-time order and append [[appendKeySentinels]] per user
+    * as the LAST file. */
   def sessionizeParquet(spark: SparkSession, in: String,
-                        schema: StructType, out: String,
-                        ckpt: String): DataFrame = withStatePartitions(spark, 8) {
-    rm(spark, out); rm(spark, ckpt)
-    val sessions = graft.streaming.Sessions.sessionizeWithState(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(in))
-      .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
-    val q = sessions.writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+                        schema: StructType, out: String): DataFrame = {
+    drain(spark, in, schema, out, 2)(
+      graft.streaming.Sessions.sessionizeWithState(_)
+        .toDF("user_id", "sess_start_us", "sess_end_us", "n_events"))
     spark.read.parquet(out)
   }
 
@@ -304,55 +279,28 @@ object StreamIngest {
     * [[graft.streaming.Sessions.streamingDedup]]
     * (dropDuplicatesWithinWatermark keyed on the content hash — state
     * bounded by the watermark horizon, the property that makes
-    * streaming dedup viable on an unbounded crawl) into the
-    * checkpointed exactly-once parquet sink. Kept rows pass through
-    * append-mode immediately (dedup is not an aggregation), so the
-    * sink content is exactly the first-seen row per content within the
-    * horizon — cross-micro-batch duplicates are dropped from state,
+    * streaming dedup viable on an unbounded crawl). Kept rows pass
+    * through append-mode immediately (dedup is not an aggregation), so
+    * the sink content is exactly the first-seen row per content within
+    * the horizon — cross-micro-batch duplicates are dropped from state,
     * which is what the q102 layout (originals first, duplicate copies
-    * in a LATER file) exercises. */
+    * in a LATER file, one file per micro-batch) exercises. */
   def dedupParquet(spark: SparkSession, in: String, schema: StructType,
-                   out: String, ckpt: String): DataFrame = withStatePartitions(spark, 8) {
-    rm(spark, out); rm(spark, ckpt)
-    val q = graft.streaming.Sessions.streamingDedup(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(in), "text")
-      .select("doc_id", "lang")
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+                   out: String): DataFrame = {
+    drain(spark, in, schema, out, 1)(
+      graft.streaming.Sessions.streamingDedup(_, "text").select("doc_id", "lang"))
     spark.read.parquet(out)
   }
 
-  /** STREAM-STREAM JOIN at the gate: view-to-click attribution joining
-    * two branches of one watermarked file-source stream (a self-join —
-    * the source is scanned once per side each micro-batch at identical
-    * offsets). A click matches every view by the same user in the
-    * preceding 30 event-time minutes; the inner join emits each pair
-    * exactly once, AS both sides arrive, through the checkpointed
-    * exactly-once parquet sink — so with the full AvailableNow drain
-    * the sink equals the batch join and the oracle needs no watermark
-    * cutoff (unlike q87's append-mode aggregation).
-    *
-    * The watermarks + the two-sided time-range condition are what
-    * BOUND THE STATE: Spark derives each side's retention from them
-    * (a view can only match clicks ≤ 30 min ahead, so view state older
-    * than watermark − 30 min − 1 h is evicted) — without them an
-    * unbounded crawl feed accretes join state forever. The caller owes
-    * the q87 event-time-ordered layout; a late file behind the
-    * watermark would silently lose its pairs (the failure mode the
-    * ordered-layout contract exists to prevent). */
-  def streamJoinParquet(spark: SparkSession, in: String,
-                        schema: StructType, out: String, ckpt: String,
-                        filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
-    import org.apache.spark.sql.functions._
-    rm(spark, out); rm(spark, ckpt)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
+  /** View-to-click attribution inputs, split from ONE watermarked
+    * source (a self-join — the source is scanned once per side each
+    * micro-batch at identical offsets): (views, clicks, band), where a
+    * click matches every view by the same user in the preceding 30
+    * event-time minutes. The watermarks + the two-sided time-range
+    * condition are what BOUND THE STATE: Spark derives each side's
+    * retention from them — without them an unbounded feed accretes join
+    * state forever. */
+  private def viewsAndClicks(src: DataFrame): (DataFrame, DataFrame, Column) = {
     val views = src.where(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("ts").as("vts"))
@@ -361,19 +309,27 @@ object StreamIngest {
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("cts"))
       .withWatermark("cts", "1 hour")
-    val q = clicks.join(views,
-        col("user_id") === col("v_user") &&
-          col("cts") >= col("vts") &&
-          col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("view_id"), col("click_id"),
-        (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
-          .as("lag_sec"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+    (views, clicks, col("user_id") === col("v_user") &&
+      col("cts") >= col("vts") &&
+      col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"))
+  }
+
+  private def lagSec: Column =
+    (unix_timestamp(col("cts")) - unix_timestamp(col("vts"))).as("lag_sec")
+
+  /** STREAM-STREAM JOIN at the gate ([[viewsAndClicks]]): the inner
+    * join emits each pair exactly once, AS both sides arrive, so with
+    * the full AvailableNow drain the sink equals the batch join and the
+    * oracle needs no watermark cutoff (unlike q87's append-mode
+    * aggregation). The caller owes the q87 event-time-ordered layout; a
+    * late file behind the watermark would silently lose its pairs. */
+  def streamJoinParquet(spark: SparkSession, in: String,
+                        schema: StructType, out: String): DataFrame = {
+    drain(spark, in, schema, out, 2) { src =>
+      val (views, clicks, band) = viewsAndClicks(src)
+      clicks.join(views, band)
+        .select(col("user_id"), col("view_id"), col("click_id"), lagSec)
+    }
     spark.read.parquet(out)
   }
 
@@ -385,64 +341,37 @@ object StreamIngest {
     * watermark progress, not just on data arrival. Every view row
     * appears exactly once in the drained sink — matched with each
     * qualifying click, or null-extended — and must equal the BATCH
-    * left outer band join row for row, which is what the oracle
-    * recomputes: a row stuck in state (watermark stalled), double
-    * emission, or premature eviction all fail the gate.
-    *
-    * Drain mechanics: the caller appends a LATE sentinel (far-future
-    * ts, negative user id) to BOTH event types — the q90 flush pattern
-    * — so the final no-data batch advances the watermark past every
-    * real view's match window. The sentinel view itself stays in state
-    * forever (its own window never closes) and is filtered out.
+    * left outer band join row for row: a row stuck in state (watermark
+    * stalled), double emission, or premature eviction all fail the
+    * gate. The caller appends [[appendJoinFlush]]; the sentinel view
+    * itself stays in state forever and is filtered out.
     *
     * Scale: join state is bounded by the watermark delay + match
     * window on both sides; keyed shuffles are per micro-batch. */
   def streamOuterJoinParquet(spark: SparkSession, in: String,
-                             schema: StructType, out: String, ckpt: String,
-                             filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
-    import org.apache.spark.sql.functions._
-    rm(spark, out); rm(spark, ckpt)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
-    val views = src.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "1 hour")
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "1 hour")
-    // No sentinel filter inside the streaming plan: a predicate on the
-    // views-side column would be PUSHED below the views watermark node,
-    // silently removing the sentinel before it can advance the
-    // watermark — the whole flush mechanism dies (observed: the last
-    // ~1.5 h of unmatched views stay in state forever). Sentinels are
-    // filtered on the batch read-back below instead.
-    val q = views.join(clicks,
-        col("user_id") === col("v_user") &&
-          col("cts") >= col("vts") &&
-          col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-        "leftOuter")
-      .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
-        (unix_timestamp(col("cts")) - unix_timestamp(col("vts")))
-          .as("lag_sec"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+                             schema: StructType, out: String): DataFrame = {
+    drain(spark, in, schema, out, 2) { src =>
+      val (views, clicks, band) = viewsAndClicks(src)
+      // No sentinel filter inside the streaming plan: a predicate on
+      // the views-side column would be PUSHED below the views watermark
+      // node, silently removing the sentinel before it can advance the
+      // watermark — the whole flush mechanism dies (observed: the last
+      // ~1.5 h of unmatched views stay in state forever). Sentinels are
+      // filtered on the batch read-back below instead.
+      views.join(clicks, band, "leftOuter")
+        .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
+          lagSec)
+    }
     spark.read.parquet(out).where(col("user_id") >= 0)
   }
 
   /** Streaming CDC UPSERT at the gate — the `foreachBatch` idiom (the
     * one streaming surface the other gates don't touch): each
     * micro-batch is reduced to per-key (count, latest-event struct) and
-    * MERGED last-writer-wins into a persisted keyed state table, the
-    * pattern a change-feed consumer runs when the sink must hold
-    * current-state rows rather than an append log (q82's merge-upsert
-    * made incremental).
+    * MERGED last-writer-wins into a persisted keyed state table under
+    * `stateRoot`, the pattern a change-feed consumer runs when the sink
+    * must hold current-state rows rather than an append log (q82's
+    * merge-upsert made incremental).
     *
     * Exactly-once without a transactional table format: state versions
     * are written to `state_v&lt;batchId&gt;` directories with a CURRENT
@@ -458,16 +387,12 @@ object StreamIngest {
     *
     * Scale: per micro-batch one keyed shuffle of the BATCH plus a
     * keyed merge against the state table. The full-state rewrite per
-    * version is the local-mode simplification: a production run
-    * bucket-partitions the state by key (the q53/q114 layout) and
-    * rewrites only touched buckets, or delegates the merge to a
-    * MERGE INTO-capable table format — the plan shape upstream of the
-    * write is identical. */
+    * version is the local-mode simplification: production rewrites
+    * only touched key buckets (the q53/q114 layout) or delegates to a
+    * MERGE INTO table format — the plan upstream of the write is the
+    * same. */
   def cdcUpsertParquet(spark: SparkSession, in: String, schema: StructType,
-                       stateRoot: String, ckpt: String,
-                       filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
-    import org.apache.spark.sql.functions._
-    rm(spark, stateRoot); rm(spark, ckpt)
+                       stateRoot: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(stateRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pointer = new org.apache.hadoop.fs.Path(root, "CURRENT")
@@ -489,45 +414,38 @@ object StreamIngest {
       fs.delete(pointer, false)
       fs.rename(tmp, pointer)
     }
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(in)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cur = readPointer()
-        if (cur.forall(_._1 < batchId)) { // idempotent-replay guard
-          val bAgg = batch
-            .select(col("user_id"), unix_micros(col("ts")).as("us"),
-              col("event_id"), col("value"))
-            .groupBy("user_id")
-            .agg(count(lit(1)).as("n_events"),
-              max(struct(col("us"), col("event_id"), col("value"))).as("last"))
-          val merged = cur match {
-            case None => bAgg
-            case Some((_, path)) =>
-              val st = batch.sparkSession.read.parquet(path)
-                .select(col("user_id"), col("n_events").as("s_n"),
-                  col("last").as("s_last"))
-              st.join(bAgg.select(col("user_id"), col("n_events").as("b_n"),
-                  col("last").as("b_last")), Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("s_n"), lit(0L)) +
-                    coalesce(col("b_n"), lit(0L))).as("n_events"),
-                  when(col("s_last").isNull, col("b_last"))
-                    .when(col("b_last").isNull, col("s_last"))
-                    .otherwise(greatest(col("s_last"), col("b_last")))
-                    .as("last"))
-          }
-          val out = s"$stateRoot/state_v$batchId"
-          merged.write.mode("overwrite").parquet(out)
-          writePointer(batchId, out)
+    def upsert(batch: DataFrame, batchId: Long): Unit = {
+      val cur = readPointer()
+      if (cur.forall(_._1 < batchId)) { // idempotent-replay guard
+        val bAgg = batch
+          .select(col("user_id"), unix_micros(col("ts")).as("us"),
+            col("event_id"), col("value"))
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_events"),
+            max(struct(col("us"), col("event_id"), col("value"))).as("last"))
+        val merged = cur match {
+          case None => bAgg
+          case Some((_, path)) =>
+            val st = batch.sparkSession.read.parquet(path)
+              .select(col("user_id"), col("n_events").as("s_n"),
+                col("last").as("s_last"))
+            st.join(bAgg.select(col("user_id"), col("n_events").as("b_n"),
+                col("last").as("b_last")), Seq("user_id"), "full_outer")
+              .select(col("user_id"),
+                (coalesce(col("s_n"), lit(0L)) +
+                  coalesce(col("b_n"), lit(0L))).as("n_events"),
+                when(col("s_last").isNull, col("b_last"))
+                  .when(col("b_last").isNull, col("s_last"))
+                  .otherwise(greatest(col("s_last"), col("b_last")))
+                  .as("last"))
         }
-        ()
+        val out = s"$stateRoot/state_v$batchId"
+        merged.write.mode("overwrite").parquet(out)
+        writePointer(batchId, out)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+    drain(spark, in, schema, stateRoot, 2,
+      sink = (w, _) => w.foreachBatch(upsert _).start())(identity)
     val fin = readPointer().getOrElse(
       throw new IllegalStateException("cdc drain produced no state version"))
     spark.read.parquet(fin._2)
@@ -537,24 +455,14 @@ object StreamIngest {
 
   /** Drain the files matching `glob` under directory `in` through
     * `transform` into the exactly-once parquet sink at `out`, then
-    * return the sink's content. Sink + checkpoint are wiped first: each
-    * call is a from-scratch drain, re-runnable within a session.
-    * `transform` must be stateless (projections/filters — append mode
-    * without watermark). */
+    * return the sink's content. Each call is a from-scratch drain,
+    * re-runnable within a session. `transform` must be stateless
+    * (projections/filters/stream-static joins — append mode without
+    * watermark). */
   def ingestParquet(spark: SparkSession, in: String, glob: String,
-                    schema: StructType, out: String, ckpt: String,
+                    schema: StructType, out: String,
                     transform: DataFrame => DataFrame): DataFrame = {
-    rm(spark, out); rm(spark, ckpt)
-    val q = transform(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", glob).parquet(in))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+    drain(spark, in, schema, out, 1, glob = Some(glob))(transform)
     spark.read.parquet(out)
   }
 
@@ -567,27 +475,14 @@ object StreamIngest {
     * this is the cheapest streaming aggregate there is; the overwrite
     * makes replay idempotent by construction (a re-run of the last
     * batch rewrites the same state — exactly-once for free, no manual
-    * batch-id fencing needed). The caller reads the sink after the
-    * drain; mid-stream the sink is always SOME complete consistent
-    * snapshot. */
+    * batch-id fencing needed). Mid-stream the sink is always SOME
+    * complete consistent snapshot. */
   def matviewParquet(spark: SparkSession, in: String, schema: StructType,
-                     out: String, ckpt: String,
-                     agg: DataFrame => DataFrame,
-                     filesPerTrigger: Int = 2): DataFrame = withStatePartitions(spark, 8) {
-    rm(spark, out); rm(spark, ckpt)
-    val q = agg(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger.toString)
-          .parquet(in))
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+                     out: String, agg: DataFrame => DataFrame): DataFrame = {
+    drain(spark, in, schema, out, 2, sink = (w, out) =>
+      w.outputMode("complete").foreachBatch { (batch: Dataset[Row], _: Long) =>
         batch.write.mode("overwrite").parquet(out)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }.start())(agg)
     spark.read.parquet(out)
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * session windows, and custom keyed state via mapGroupsWithState.
   *
   * Every transform here takes a DataFrame that may be either a static
-  * batch or a `readStream` source — the plans are identical; only the
-  * sink differs (`write` vs `writeStream`). The batch twin of
+  * batch or a streaming file source — the plans are identical; only
+  * the sink differs (see `graft.sources.StreamIngest`). The batch twin of
   * [[sessionAgg]] is `graft.rel.Queries.sessionize` (same ≥gap boundary
   * semantics), which is what the DuckDB oracle checks; the streaming
   * path is equivalence-tested against it in the test suite via

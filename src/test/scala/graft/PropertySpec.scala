@@ -74,6 +74,21 @@ class PropertySpec extends SparkSpec {
     assert(got.where(col("fold") =!= col("whole")).isEmpty)
   }
 
+  // ...and outside that domain the fold raises rather than returning a
+  // hash that silently differs from the concat form.
+  test("fnvFoldSmallInt raises outside 0..99 (b = 100, b = -1)") {
+    import spark.implicits._
+    functions.HashExprs.register(spark)
+    Seq(100, -1).foreach { b =>
+      val df = Seq(("ev", b)).toDF("t", "b")
+      val e = intercept[Exception] {
+        df.select(functions.HashExprs.fnvFoldSmallInt(
+          functions.HashExprs.fnv1a32("t"), col("b"))).collect()
+      }
+      assert(e.getMessage.contains("outside [0, 100)"), s"b=$b: ${e.getMessage}")
+    }
+  }
+
   // The emission-canonicalization property (VERDICT r8 item 2): femit
   // must never emit a signbit-set zero or a NaN for ANY double input —
   // those are exactly the byte-level encodings a cross-engine hash
